@@ -85,3 +85,15 @@ def test_ragged_point_mutations(ragged):
 
     ragged.delete_by_id(doc_id)
     assert ragged.count() == 2 and ragged.find_by_id(doc_id) is None
+
+
+def test_sort_resolves_payload_and_system_paths(ragged):
+    """Sort keys resolve like query paths: payload fields through JSON
+    extraction, system fields as columns, projected away or not."""
+    rows = ragged.find(sort=[("tag", -1)]).collect()
+    assert [json.loads(r["doc"])["tag"] for r in rows] == ["s", "n2", "n1"]
+    projected = ragged.find(projection={"_id": 1}, sort=[("tag", -1)]).collect()
+    assert [r["_id"] for r in projected] == [r["_id"] for r in rows]
+    rows = ragged.find(sort=[("_ts_meta.sys_time", 1)]).collect()
+    times = [r["_ts_meta"]["sys_time"] for r in rows]
+    assert times == sorted(times)

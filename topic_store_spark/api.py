@@ -49,6 +49,13 @@ class Storage(ABC):
     def _apply_projection(self, df: DataFrame, projection: dict | None) -> DataFrame:
         return apply_projection(df, projection)
 
+    def _sort_col(self, df: DataFrame, path: str):
+        """Hook: dotted sort key -> Column (each segment quoted; a path
+        absent from the schema sorts as NULL)."""
+        from topic_store_spark.query.compiler import path_col
+
+        return path_col(path, df.schema)
+
     def find(
         self,
         query: dict | None = None,
@@ -59,18 +66,14 @@ class Storage(ABC):
     ) -> DataFrame:
         """Mongo-style find compiled to filter/select/orderBy/limit
         (parity: reference database.py:193-204)."""
-        from pyspark.sql import functions as F
-
         df = self.to_df()
         df = df.filter(self._compile_query(df, query))
-        df = self._apply_projection(df, projection)
         if sort:
-            df = df.orderBy(
-                *[
-                    F.col(f"`{k}`").asc() if d >= 0 else F.col(f"`{k}`").desc()
-                    for k, d in sort
-                ]
-            )
+            # Mongo sorts before projecting: a sort key the projection
+            # drops still orders the result
+            keys = [(self._sort_col(df, k), d) for k, d in sort]
+            df = df.orderBy(*[c.asc() if d >= 0 else c.desc() for c, d in keys])
+        df = self._apply_projection(df, projection)
         if skip:
             df = df.offset(int(skip))
         if limit is not None:

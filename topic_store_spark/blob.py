@@ -9,7 +9,8 @@ with a lazy-skip mode (database.py:174,202-204) and GC on delete
 Spark-side policy: big ``BinaryType`` cells are written as individual
 files under a blob directory and the cell is replaced by a pointer struct
 ``{__blob__: path, size: n}``.  Externalization runs distributed — each
-executor writes its own partition's blobs (no driver fan-in).  Lazy skip
+executor writes its own partition's blobs (no driver fan-in) — except for
+rows the driver holds already (``insert_many``), which it writes itself.  Lazy skip
 is free: don't resolve the pointer column (column pruning never reads the
 bytes).  At 100 TB this is the difference between a 16 MB row limit and
 none: rows stay small, scans stay columnar, blobs stream straight from
@@ -33,6 +34,76 @@ def _binary_columns(schema: T.StructType) -> list[str]:
     return [f.name for f in schema.fields if isinstance(f.dataType, T.BinaryType)]
 
 
+POINTER_TYPE = T.StructType(
+    [
+        T.StructField("__blob__", T.StringType()),
+        T.StructField("size", T.LongType()),
+        T.StructField("inline", T.BinaryType()),
+    ]
+)
+
+
+def blob_pointer(
+    cell, blob_dir: str, threshold: int, doc_id, name: str
+) -> dict | None:
+    """One binary cell -> its ``POINTER_TYPE`` value, writing the bytes to
+    ``<blob_dir>/<doc_id>_<name>.bin`` when they exceed ``threshold``
+    (a random key stands in for a missing ``doc_id``)."""
+    if cell is None:
+        return None
+    payload = bytes(cell)
+    if len(payload) <= threshold:
+        return {"__blob__": None, "size": len(payload), "inline": payload}
+    import uuid
+
+    key = uuid.uuid4().hex if doc_id is None else doc_id
+    fpath = os.path.join(blob_dir, f"{key}_{name}.bin")
+    with open(fpath, "wb") as fh:
+        fh.write(payload)
+    return {"__blob__": fpath, "size": len(payload), "inline": None}
+
+
+def pointer_schema(
+    schema: T.StructType, columns: list[str] | None = None
+) -> T.StructType:
+    """``schema`` with its binary ``columns`` (default: every top-level
+    binary column) turned into ``POINTER_TYPE``: the written shape."""
+    columns = _binary_columns(schema) if columns is None else columns
+    return T.StructType(
+        [
+            T.StructField(f.name, POINTER_TYPE, True) if f.name in columns else f
+            for f in schema.fields
+        ]
+    )
+
+
+def externalize_rows(
+    rows: list[tuple],
+    schema: T.StructType,
+    blob_dir: str,
+    threshold: int = DEFAULT_THRESHOLD,
+    id_col: str = "_id",
+) -> tuple[list[tuple], T.StructType]:
+    """``externalize_blobs`` for rows the driver already holds (e.g. from
+    ``documents_to_rows``): the same blob files and pointer values, with
+    no Spark job and no Python worker.  Returns (rows, schema)."""
+    columns = _binary_columns(schema)
+    if not columns:
+        return rows, schema
+    os.makedirs(blob_dir, exist_ok=True)
+    names = schema.fieldNames()
+    at = [names.index(name) for name in columns]
+    id_at = names.index(id_col) if id_col in names else None
+    out = []
+    for row in rows:
+        row = list(row)
+        doc_id = None if id_at is None else row[id_at]
+        for i in at:
+            row[i] = blob_pointer(row[i], blob_dir, threshold, doc_id, names[i])
+        out.append(tuple(row))
+    return out, pointer_schema(schema, columns)
+
+
 def externalize_blobs(
     df: DataFrame,
     blob_dir: str,
@@ -52,23 +123,7 @@ def externalize_blobs(
         return df
     os.makedirs(blob_dir, exist_ok=True)
 
-    pointer_type = T.StructType(
-        [
-            T.StructField("__blob__", T.StringType()),
-            T.StructField("size", T.LongType()),
-            T.StructField("inline", T.BinaryType()),
-        ]
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(f.name, pointer_type, True)
-            if f.name in columns
-            else f
-            for f in df.schema.fields
-        ]
-    )
-
+    out_schema = pointer_schema(df.schema, columns)
     has_id = id_col in df.columns
     field_order = [f.name for f in out_schema.fields]
 
@@ -77,33 +132,17 @@ def externalize_blobs(
     # the full row even when nothing exceeds the threshold), and each
     # batch writes only its oversized cells.
     def _write_batches(batches):
-        import os as _os
-        import uuid as _uuid
-
         import pandas as pd
 
         for pdf in batches:
             for name in columns:
-                pointers = []
-                for pos, cell in enumerate(pdf[name]):
-                    if cell is None:
-                        pointers.append(None)
-                        continue
-                    payload = bytes(cell)
-                    if len(payload) > threshold:
-                        doc_id = (
-                            pdf[id_col].iloc[pos] if has_id else _uuid.uuid4().hex
-                        )
-                        fpath = _os.path.join(blob_dir, f"{doc_id}_{name}.bin")
-                        with open(fpath, "wb") as fh:
-                            fh.write(payload)
-                        pointers.append(
-                            {"__blob__": fpath, "size": len(payload), "inline": None}
-                        )
-                    else:
-                        pointers.append(
-                            {"__blob__": None, "size": len(payload), "inline": payload}
-                        )
+                pointers = [
+                    blob_pointer(
+                        cell, blob_dir, threshold,
+                        pdf[id_col].iloc[pos] if has_id else None, name,
+                    )
+                    for pos, cell in enumerate(pdf[name])
+                ]
                 pdf[name] = pd.Series(pointers, index=pdf.index, dtype=object)
             yield pdf[field_order]
 

@@ -370,33 +370,36 @@ def _denull(
     return dtype
 
 
-_INT_FAMILY = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-_FLOAT_FAMILY = (T.FloatType, T.DoubleType)
+def _fields_by_name(struct: T.StructType) -> dict[str, T.StructField]:
+    # Spark's schema merge matches field names case-insensitively
+    # (``spark.sql.caseSensitive`` defaults to false)
+    return {f.name.lower(): f for f in struct.fields}
 
 
 def schema_merge_conflicts(
     existing: T.DataType, incoming: T.DataType, _path: str = ""
 ) -> list[str]:
     """Dotted paths where ``incoming`` cannot parquet-schema-merge with
-    ``existing`` (mirrors Spark's merge rules: identical types, widening
-    within the integer or float family, recursive struct/array/map;
-    everything else conflicts).  Used to fail an append at WRITE time —
-    an incompatible part file would otherwise poison every subsequent
-    read of the store with CANNOT_MERGE_SCHEMAS."""
+    ``existing``.  Mirrors Spark's merge rules: equal types (up to
+    nullability), decimals of equal scale, recursive struct/array/map
+    with struct fields matched case-insensitively; everything else
+    conflicts — Spark 4's ``mergeSchema`` widens neither INT to BIGINT
+    nor FLOAT to DOUBLE.  Used to fail an append at WRITE time — an
+    incompatible part file would otherwise poison every subsequent read
+    of the store with CANNOT_MERGE_SCHEMAS."""
     a, b = existing, incoming
     if a == b or isinstance(a, T.NullType) or isinstance(b, T.NullType):
         return []
-    if isinstance(a, _INT_FAMILY) and isinstance(b, _INT_FAMILY):
-        return []
-    if isinstance(a, _FLOAT_FAMILY) and isinstance(b, _FLOAT_FAMILY):
+    if isinstance(a, T.DecimalType) and isinstance(b, T.DecimalType) and a.scale == b.scale:
         return []
     if isinstance(a, T.StructType) and isinstance(b, T.StructType):
-        a_fields = {f.name: f.dataType for f in a.fields}
+        a_fields = _fields_by_name(a)
         out: list[str] = []
         for f in b.fields:
-            if f.name in a_fields:
+            match = a_fields.get(f.name.lower())
+            if match is not None:
                 out += schema_merge_conflicts(
-                    a_fields[f.name], f.dataType, f"{_path}{f.name}."
+                    match.dataType, f.dataType, f"{_path}{f.name}."
                 )
         return out
     if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
@@ -409,6 +412,43 @@ def schema_merge_conflicts(
         f"{_path.rstrip('.') or '<root>'}: "
         f"{a.simpleString()} (store) vs {b.simpleString()} (incoming)"
     ]
+
+
+def merge_schemas(existing: T.StructType, incoming: T.StructType) -> T.StructType:
+    """The schema Spark's parquet ``mergeSchema`` reads from a store that
+    holds files of both schemas: ``existing`` fields first, with their
+    names and metadata, then the fields only ``incoming`` has; every
+    field, element and map value nullable, as Spark reads parquet back.
+    Raises ``ValueError`` where Spark fails with CANNOT_MERGE_SCHEMAS
+    (``schema_merge_conflicts``)."""
+    conflicts = schema_merge_conflicts(existing, incoming)
+    if conflicts:
+        raise ValueError(f"schemas do not merge: {conflicts}")
+    return _merge_types(existing, incoming)
+
+
+def _merge_types(a: T.DataType, b: T.DataType) -> T.DataType:
+    """Merge of two conflict-free types; ``_merge_types(t, t)`` is ``t``
+    made nullable throughout."""
+    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
+        a_fields, b_fields = _fields_by_name(a), _fields_by_name(b)
+        pairs = [(f, b_fields.get(key, f)) for key, f in a_fields.items()]
+        pairs += [(f, f) for key, f in b_fields.items() if key not in a_fields]
+        return T.StructType([
+            T.StructField(f.name, _merge_types(f.dataType, g.dataType), True, f.metadata)
+            for f, g in pairs
+        ])
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        return T.ArrayType(_merge_types(a.elementType, b.elementType), True)
+    if isinstance(a, T.MapType) and isinstance(b, T.MapType):
+        return T.MapType(
+            _merge_types(a.keyType, b.keyType),
+            _merge_types(a.valueType, b.valueType),
+            True,
+        )
+    if isinstance(a, T.DecimalType) and isinstance(b, T.DecimalType):
+        return T.DecimalType(max(a.precision, b.precision), a.scale)
+    return a
 
 
 def _coerce(value: Any, dtype: T.DataType) -> Any:
@@ -436,3 +476,49 @@ def documents_to_rows(documents: list[dict], schema: T.StructType) -> list[tuple
         tuple(_coerce(doc.get(f.name), f.dataType) for f in schema.fields)
         for doc in documents
     ]
+
+
+_TIMESTAMP = T.TimestampType()
+
+
+def rows_to_arrow(rows: list[tuple], schema: T.StructType):
+    """Rows as ``spark.createDataFrame(rows, schema)`` takes them (e.g.
+    from ``documents_to_rows``) -> a ``pyarrow.Table`` typed by
+    ``to_arrow_schema(schema)``.  ``spark.createDataFrame(table, schema)``
+    hands the table to the JVM as one Arrow batch: one partition, no
+    Python worker, one part file when written.  Timestamps go through
+    ``TimestampType.toInternal``, so naive values are Python local time
+    exactly as on the row path."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for values, field, arrow_field in zip(columns, schema.fields, arrow_schema):
+        if _has_timestamp(field.dataType):
+            values = [_timestamps_to_micros(v, field.dataType) for v in values]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def _has_timestamp(dtype: T.DataType) -> bool:
+    if isinstance(dtype, T.ArrayType):
+        return _has_timestamp(dtype.elementType)
+    if isinstance(dtype, T.StructType):
+        return any(_has_timestamp(f.dataType) for f in dtype.fields)
+    return isinstance(dtype, T.TimestampType)
+
+
+def _timestamps_to_micros(value: Any, dtype: T.DataType) -> Any:
+    if value is None:
+        return None
+    if isinstance(dtype, T.TimestampType):
+        return _TIMESTAMP.toInternal(value)
+    if isinstance(dtype, T.ArrayType):
+        return [_timestamps_to_micros(v, dtype.elementType) for v in value]
+    if isinstance(dtype, T.StructType):
+        return tuple(
+            _timestamps_to_micros(v, f.dataType) for v, f in zip(value, dtype.fields)
+        )
+    return value

@@ -23,6 +23,7 @@ import json
 import logging
 import os
 import pickle
+import re
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,12 +31,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from topic_store_spark.api import Storage, register_storage
-from topic_store_spark.codec import documents_to_rows, infer_schema
+from topic_store_spark.codec import (
+    documents_to_rows,
+    infer_schema,
+    merge_schemas,
+    rows_to_arrow,
+    schema_merge_conflicts,
+)
 from topic_store_spark.data import TopicStore
 
 logger = logging.getLogger(__name__)
 
 BINARY_SENTINEL = "__binary_b64__"
+
+#: Spark names every file of one write job ``part-<split>-<job uuid>...``
+_PART_JOB = re.compile(r"part-\d+-([0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12})")
 
 
 def with_partition_date(df: DataFrame, col_name: str = "_ts_date") -> DataFrame:
@@ -56,6 +66,19 @@ class ParquetStorage(Storage):
     At 100 TB this is the difference between scanning the corpus and
     scanning a day: any filter on the partition column becomes a
     directory-level PartitionFilter (zero data IO for pruned dates).
+
+    Schema cache: every reader and writer takes the store's schema from
+    ``_schema()`` — Spark's own ``mergeSchema`` inference, kept with the
+    listing (path and size of every part file) it was taken at, so
+    ``to_df()`` reads with a fixed schema and runs no inference job while
+    the listing is unchanged.  Any change to the listing — a foreign
+    append, a rewrite, another process — invalidates the entry and the
+    next read infers afresh.  An append of this instance advances the
+    entry in place (``codec.merge_schemas``), assuming a single writer
+    per append: only when the entry matched the listing just before the
+    write and every file the write added carries its job UUID; otherwise,
+    and for partitioned layouts and the rewrites of ``_overwrite``, the
+    entry is dropped.
     """
 
     suffixes = (".parquet", ".tsp")
@@ -76,26 +99,70 @@ class ParquetStorage(Storage):
         # write and find() rehydrates them unless skip_fetch_binary
         self.blob_dir = blob_dir
         self.blob_threshold = blob_threshold
+        # (listing, schema): see the class docstring.  Entries check
+        # themselves against the listing, so a racing reader or writer
+        # can only make the next read infer again, never read wrong.
+        self._cached: tuple[tuple, T.StructType] | None = None
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "ParquetStorage":
         return cls(spark, path)
 
-    def _exists(self) -> bool:
+    def _listing(self) -> tuple[tuple[str, int], ...]:
+        """Sorted (path, size) of the store's data files; empty while the
+        store does not exist.  Partitioned layouts nest part files under
+        key=value directories."""
         p = self.path
-        if os.path.isdir(p):
-            # partitioned layouts nest part files under key=value dirs
-            for _root, _dirs, files in os.walk(p):
-                if any(
-                    name.endswith(".parquet") or name.startswith("part-")
-                    for name in files
-                ):
-                    return True
-            return False
-        return os.path.exists(p)
+        if not os.path.isdir(p):
+            return ((p, os.path.getsize(p)),) if os.path.exists(p) else ()
+        files = []
+        for root, _dirs, names in os.walk(p):
+            for name in names:
+                if name.endswith(".parquet") or name.startswith("part-"):
+                    full = os.path.join(root, name)
+                    files.append((full, os.path.getsize(full)))
+        return tuple(sorted(files))
+
+    def _schema(
+        self, listing: tuple[tuple[str, int], ...] | None = None
+    ) -> T.StructType | None:
+        """The store's merged schema (None while it has no data files);
+        infers only when ``listing`` differs from the cached entry's."""
+        listing = self._listing() if listing is None else listing
+        if not listing:
+            return None
+        cached = self._cached
+        if cached is not None and cached[0] == listing:
+            return cached[1]
+        schema = self.spark.read.option("mergeSchema", "true").parquet(self.path).schema
+        self._cached = (listing, schema)
+        return schema
+
+    def _remember_append(
+        self, before: tuple[tuple[str, int], ...], written: T.StructType
+    ) -> None:
+        """Advance the cached schema past this instance's own append, or
+        drop it (class docstring)."""
+        cached, self._cached = self._cached, None
+        if self.partition_by:
+            return
+        if not before:
+            base = T.StructType()
+        elif cached is not None and cached[0] == before:
+            base = cached[1]
+        else:
+            return
+        after = self._listing()
+        sizes, old = dict(after), dict(before)
+        kept = all(sizes.get(path) == size for path, size in before)
+        added = [os.path.basename(path) for path in sizes if path not in old]
+        jobs = {m and m.group(1) for m in map(_PART_JOB.match, added)}
+        if kept and len(jobs) == 1 and None not in jobs:
+            self._cached = (after, merge_schemas(base, written))
 
     def to_df(self) -> DataFrame:
-        if not self._exists():
+        schema = self._schema()
+        if schema is None:
             schema = T.StructType(
                 [
                     T.StructField("_id", T.StringType()),
@@ -112,7 +179,7 @@ class ParquetStorage(Storage):
                 ]
             )
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        return self.spark.read.schema(schema).parquet(self.path)
 
     def insert_one(self, document: dict | TopicStore) -> str:
         store = document if isinstance(document, TopicStore) else TopicStore(document)
@@ -126,11 +193,41 @@ class ParquetStorage(Storage):
         docs = [s.dict for s in stores]
         # all-null fields adopt the store's existing type (no evidence of
         # their own), so {"n": None} appends cleanly to a BIGINT column
-        reference = self.to_df().schema if self._exists() else None
-        schema = infer_schema(docs, reference=reference)
-        df = self.spark.createDataFrame(documents_to_rows(docs, schema), schema)
-        self.write_df(df)
+        existing = self._schema()
+        schema = infer_schema(docs, reference=existing)
+        rows = documents_to_rows(docs, schema)
+        if self.blob_dir:
+            # the rows are in the driver already: write their blobs here
+            # rather than in a Python-worker pass of write_df, once the
+            # append is known not to be refused
+            from topic_store_spark.blob import (
+                DEFAULT_THRESHOLD,
+                externalize_rows,
+                pointer_schema,
+            )
+
+            self._refuse_conflicts(existing, pointer_schema(schema))
+            rows, schema = externalize_rows(
+                rows, schema, self.blob_dir, self.blob_threshold or DEFAULT_THRESHOLD
+            )
+        table = rows_to_arrow(rows, schema)
+        self.write_df(self.spark.createDataFrame(table, schema))
         return [s.id for s in stores]
+
+    @staticmethod
+    def _refuse_conflicts(
+        existing: T.StructType | None, written: T.StructType
+    ) -> None:
+        """An incompatible part file would poison every subsequent read,
+        so refuse the write instead."""
+        conflicts = [] if existing is None else schema_merge_conflicts(existing, written)
+        if conflicts:
+            raise ValueError(
+                "append would corrupt the store (subsequent reads fail "
+                "with CANNOT_MERGE_SCHEMAS): incompatible column types "
+                f"{conflicts}; cast the data, or use RaggedParquetStorage "
+                "for structurally heterogeneous corpora"
+            )
 
     def write_df(self, df: DataFrame) -> None:
         if self.blob_dir:
@@ -139,20 +236,12 @@ class ParquetStorage(Storage):
             df = externalize_blobs(
                 df, self.blob_dir, threshold=self.blob_threshold or DEFAULT_THRESHOLD
             )
-        if self._exists():
-            # guard runs on the FINAL written shape (after blob pointer
-            # rewrite): an incompatible part file would poison every
-            # subsequent read, so refuse the write instead
-            from topic_store_spark.codec import schema_merge_conflicts
-
-            conflicts = schema_merge_conflicts(self.to_df().schema, df.schema)
-            if conflicts:
-                raise ValueError(
-                    "append would corrupt the store (subsequent reads fail "
-                    "with CANNOT_MERGE_SCHEMAS): incompatible column types "
-                    f"{conflicts}; cast the data, or use RaggedParquetStorage "
-                    "for structurally heterogeneous corpora"
-                )
+        before = self._listing()
+        existing = self._schema(before)
+        written = df.schema
+        # guard runs on the FINAL written shape (after blob pointer
+        # rewrite)
+        self._refuse_conflicts(existing, written)
         writer = df.write.mode("append")
         if self.partition_by:
             missing = [c for c in self.partition_by if c not in df.columns]
@@ -163,6 +252,7 @@ class ParquetStorage(Storage):
                 raise ValueError(f"partition columns missing from data: {missing}")
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(self.path)
+        self._remember_append(before, written)
 
     def count(self, query: dict | None = None, estimate: bool = False) -> int:
         """Exact count scans; ``estimate=True`` is metadata-only — summed
@@ -171,23 +261,11 @@ class ParquetStorage(Storage):
         if estimate and query:
             raise ValueError("estimate=True cannot be combined with a query")
         if estimate:
-            if not self._exists():
-                return 0
             import pyarrow.parquet as pq
 
-            total = 0
-            if os.path.isdir(self.path):
-                for root, _dirs, files in os.walk(self.path):
-                    for name in files:
-                        if name.endswith(".parquet") or (
-                            name.startswith("part-") and not name.endswith(".crc")
-                        ):
-                            total += pq.ParquetFile(
-                                os.path.join(root, name)
-                            ).metadata.num_rows
-            else:
-                total = pq.ParquetFile(self.path).metadata.num_rows
-            return total
+            return sum(
+                pq.ParquetFile(path).metadata.num_rows for path, _ in self._listing()
+            )
         return super().count(query)
 
     def find(self, *args, skip_fetch_binary: bool = False, **kwargs) -> DataFrame:
@@ -215,7 +293,8 @@ class ParquetStorage(Storage):
             writer = writer.partitionBy(*self.partition_by)
         try:
             writer.parquet(tmp)
-            if self._exists():
+            self._cached = None
+            if self._listing():
                 # atomic swap: stage the old store aside, promote the new one
                 old = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
                 os.rename(self.path, old)
@@ -287,9 +366,10 @@ class ParquetStorage(Storage):
         return before - int(obs.get["kept"])
 
     def compact(self, target_rows_per_file: int = 1_000_000) -> int:
-        """Small-file maintenance: append-only ingest (one part file per
-        ``insert_one``) fragments the store; at scale the file-listing +
-        footer reads dominate scan setup.  Rewrites the store into
+        """Small-file maintenance: append-only ingest fragments the store
+        — every ``insert_one`` / ``insert_many`` adds exactly one part
+        file — and at scale the file-listing + footer reads dominate scan
+        setup.  Rewrites the store into
         ``ceil(rows / target_rows_per_file)`` files via the atomic
         overwrite swap and returns the new file count.  Partitioned
         layouts compact within each partition directory (the
@@ -304,10 +384,7 @@ class ParquetStorage(Storage):
         else:
             df = df.repartition(files)
         self._overwrite(df)
-        count = 0
-        for _root, _dirs, names in os.walk(self.path):
-            count += sum(1 for f in names if f.endswith(".parquet") or f.startswith("part-"))
-        return count
+        return len(self._listing())
 
 
 @register_storage
@@ -387,11 +464,13 @@ class RaggedParquetStorage(Storage):
     def load(cls, spark: SparkSession, path: str) -> "RaggedParquetStorage":
         return cls(spark, path)
 
-    def _exists(self) -> bool:
-        return ParquetStorage._exists(self)  # same on-disk layout check
+    _listing = ParquetStorage._listing  # same on-disk layout
+
+    def _sort_col(self, df: DataFrame, path: str):
+        return self._resolve(path, None)
 
     def to_df(self) -> DataFrame:
-        if not self._exists():
+        if not self._listing():
             return self.spark.createDataFrame([], self.SCHEMA)
         return self.spark.read.parquet(self.path)
 
@@ -417,7 +496,8 @@ class RaggedParquetStorage(Storage):
                     json.dumps(payload, default=_json_default, sort_keys=True),
                 )
             )
-        self.spark.createDataFrame(rows, self.SCHEMA).write.mode("append").parquet(
+        table = rows_to_arrow(rows, self.SCHEMA)
+        self.spark.createDataFrame(table, self.SCHEMA).write.mode("append").parquet(
             self.path
         )
         return [s.id for s in stores]
